@@ -876,13 +876,13 @@ def run(argv: list[str], spark=None, out=sys.stdout) -> int:
         return 0
 
     if args.command == "latest":
-        rows = engine.latest(
+        row = engine.latest(
             args.what, args.where, as_of=args.as_of, lookback_days=args.lookback
-        ).collect()
-        if not rows:
+        )
+        if row is None:
             print("null", file=out)
             return 1
-        print(fmt(rows[0].asDict()), file=out)
+        print(fmt(row.asDict()), file=out)
         return 0
     return 2
 

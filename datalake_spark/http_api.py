@@ -30,14 +30,21 @@ reference's next-token loop (v0.py:385-402).
 
 Scale notes: the WSGI layer only ever drives bounded driver-side work — a
 page collect (<=100 rows), a 0-or-1-row latest probe, a point lookup, or a
-streamed content fetch; every filter stays a pushed-down Spark plan.  One
-SparkSession serves all requests (wsgiref is single-threaded; put a real
-WSGI server in front for concurrency — the app object is stateless).
+streamed content fetch; every filter stays a pushed-down Spark plan.  Each
+read route runs exactly one Spark job, because a job's fixed cost dwarfs
+the few rows a request returns: listings dedup by id within the page, as
+the reference does (querier.py:146-163), instead of with a global shuffle
+(see QueryEngine.fetch_page); a point lookup collects its filtered scan
+whole and takes the first row; ``latest`` returns the row its probe
+collected.  One SparkSession serves all requests (wsgiref is
+single-threaded; put a real WSGI server in front for concurrency — the
+app object is stateless).
 """
 
 from __future__ import annotations
 
 import json
+import math
 import threading
 import time
 from collections import deque
@@ -104,6 +111,14 @@ def _route_label(path: str) -> str:
     return path or "/"
 
 
+def _nearest_rank(sorted_ms: list[float], pct: int) -> float | None:
+    """The pct-th percentile of an ascending list by the nearest-rank
+    rule (always an observed value), or None for an empty list."""
+    if not sorted_ms:
+        return None
+    return sorted_ms[max(0, math.ceil(pct / 100 * len(sorted_ms)) - 1)]
+
+
 class _HttpError(Exception):
     def __init__(self, status: int, code: str, message: str) -> None:
         super().__init__(message)
@@ -148,16 +163,28 @@ class RequestMonitor:
 
     def snapshot(self) -> list[dict]:
         """Aggregate view: one row per (route, status) with count, mean
-        and max latency, and error count."""
+        and max latency, and error count since start, plus the p50/p99
+        latency (nearest rank) over the window of raw records still in the
+        ring buffer and that window's sample count ``window_n``.  The
+        percentiles are computed here, not per request; they are None
+        when the window holds no sample of the route (e.g. right after
+        flush_parquet)."""
         with self._lock:
-            return [
-                {
+            samples: dict[tuple[str, int], list[float]] = {}
+            for r in self.records:
+                samples.setdefault((r["route"], r["status"]), []).append(
+                    r["ms"])
+            out = []
+            for (route, status), a in sorted(self.by_route.items()):
+                ms = sorted(samples.get((route, status), ()))
+                out.append({
                     "route": route, "status": status, "n": a["n"],
                     "mean_ms": a["sum_ms"] / a["n"], "max_ms": a["max_ms"],
-                    "n_err": a["n_err"],
-                }
-                for (route, status), a in sorted(self.by_route.items())
-            ]
+                    "n_err": a["n_err"], "window_n": len(ms),
+                    "p50_ms": _nearest_rank(ms, 50),
+                    "p99_ms": _nearest_rank(ms, 99),
+                })
+            return out
 
     def flush_parquet(self, spark, path: str) -> int:
         """Append the buffered raw records to a parquet reports table and
@@ -330,12 +357,13 @@ class DatalakeHttpApp:
         )
         if params.get("work_id") is not None:
             df = self.engine.by_work_id(
-                params["work_id"], params["what"], where=params.get("where")
+                params["work_id"], params["what"], where=params.get("where"),
+                dedup=False,
             )
         else:
             df = self.engine.by_time(
                 params["what"], params["start"], params["end"],
-                where=params.get("where"),
+                where=params.get("where"), dedup=False,
             )
         rows, token = self.engine.fetch_page(
             df, cursor=qs.get("cursor"), page_size=self.page_size
@@ -352,7 +380,7 @@ class DatalakeHttpApp:
         )
 
     def _lookup(self, file_id: str):
-        rows = self.engine.by_id(file_id).limit(1).collect()
+        rows = self.engine.by_id(file_id, dedup=False).collect()
         if not rows:
             raise _HttpError(
                 404, "NoSuchFile", f"no file with id {file_id}"
@@ -386,17 +414,15 @@ class DatalakeHttpApp:
                 400, "InvalidLookback",
                 f"lookback must be an integer not {type(lookback)}",
             )
-        rows = self.engine.latest(
-            what, where, lookback_days=lookback
-        ).collect()
-        if not rows:
+        row = self.engine.latest(what, where, lookback_days=lookback)
+        if row is None:
             m = 'No "{}" files found in last {} days from "{}"'
             raise _HttpError(
                 404, "NoSuchFile", m.format(what, lookback, where)
             )
         if want_data:
-            return self._content(rows[0])
-        return self._json(_record(rows[0], base))
+            return self._content(row)
+        return self._json(_record(row, base))
 
 
 _ENDPOINTS = (

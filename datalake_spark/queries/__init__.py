@@ -93,6 +93,16 @@ _SCHEMA_MEMO: dict = {}
 # SPARK_GRAFT_NO_SPREAD=1 disables it (A/B isolation knob).
 _SPREAD_MIN_ROWS = 2000
 _SPREAD_MEMO: dict = {}
+# errors that disable the spread instead of failing the query: pyarrow
+# missing, transient IO, or a footer pyarrow cannot read (ArrowInvalid is
+# a ValueError; other footer errors are only ArrowException)
+try:
+    from pyarrow.lib import ArrowException
+
+    _NO_SPREAD_ERRORS: tuple = (ImportError, OSError, ValueError,
+                                ArrowException)
+except ImportError:
+    _NO_SPREAD_ERRORS = (ImportError, OSError, ValueError)
 
 
 def _spread_partitions(spark: SparkSession, path: str):
@@ -125,12 +135,11 @@ def _spread_partitions(spark: SparkSession, path: str):
                 rgs += md.num_row_groups
             if rows >= _SPREAD_MIN_ROWS and rgs < par:
                 out = par
-    except (ImportError, OSError, ValueError):
-        # pyarrow missing / transient IO / corrupt footer (ArrowInvalid
-        # is a ValueError): the safe answer is "no spread", but do NOT
-        # memoize it — a transient first-touch hiccup must not disable
-        # the floor for the whole session (r14 advisor finding).
-        # Anything else (a programming error) propagates.
+    except _NO_SPREAD_ERRORS:
+        # the safe answer is "no spread", but do NOT memoize it — a
+        # transient first-touch hiccup must not disable the floor for
+        # the whole session.  Anything else (a programming error)
+        # propagates.
         return None
     _SPREAD_MEMO[path] = out
     return out

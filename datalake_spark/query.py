@@ -9,12 +9,27 @@ Reference entry points (SURVEY.md §2/§3):
 Everything is declarative DataFrame logic: Catalyst turns the interval
 predicate into parquet row-group skipping plus (when the catalog is
 partitioned by bucket_date) partition pruning; the reference's hand-written
-bucket walk, cursor machine, and per-page dedup all disappear.
+bucket walk and cursor machine disappear.
+
+Dedup contract.  The catalog may hold the same id more than once (a file
+pushed twice).  ``by_time``, ``by_work_id`` and ``by_id`` return frames
+deduplicated by id over the whole result — the form the CLI, the Python
+API and the parity queries use.  ``fetch_page`` dedups only within the
+page it returns, as the reference does (querier.py:146-163, caveat
+v0.py:216-221): identical copies of a row share one keyset position, so
+no id repeats across pages either.
+
+One Spark job per served request.  A Spark job costs far more fixed time
+than a page of rows, so every read the HTTP app makes is a single
+shuffle-free collect: a keyset top-k for a page (``dedup=False`` frames,
+deduplicated in the page), a plain filtered scan for a point lookup (no
+``limit``, whose partition-at-a-time escalation launches extra jobs), and
+one probe of the latest table for ``latest``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from datalake_spark.metadata import DAY_MS, InvalidDatalakeMetadata, normalize_date
@@ -152,8 +167,16 @@ class QueryEngine:
         self._wid_index = work_id_index
         self._has_bucket_date = "bucket_date" in files.columns
 
+    @staticmethod
+    def _dedup(df: DataFrame, dedup: bool) -> DataFrame:
+        return df.dropDuplicates(["id"]) if dedup else df
+
     # -- O1/O3: time-interval query ----------------------------------------
-    def by_time(self, what: str, start, end, where: str | None = None) -> DataFrame:
+    def by_time(self, what: str, start, end, where: str | None = None,
+                *, dedup: bool = True) -> DataFrame:
+        """Files of ``what`` whose interval overlaps [start, end].  With
+        ``dedup=False`` the raw match frame, for callers that dedup per
+        page (fetch_page) instead of paying a global shuffle."""
         qstart, qend = normalize_date(start), normalize_date(end)
         df = self.files_df.filter(F.col("what") == what)
         if self._has_bucket_date:
@@ -161,12 +184,11 @@ class QueryEngine:
         df = df.filter(interval_overlap(qstart, qend))
         if where is not None:
             df = df.filter(F.col("where") == where)
-        # global dedup by id — strictly stronger than the reference's
-        # page-scoped dedup (querier.py:146-163, caveat v0.py:216-221)
-        return df.dropDuplicates(["id"])
+        return self._dedup(df, dedup)
 
     # -- O2: work-id query --------------------------------------------------
-    def by_work_id(self, work_id: str, what: str, where: str | None = None) -> DataFrame:
+    def by_work_id(self, work_id: str, what: str, where: str | None = None,
+                   *, dedup: bool = True) -> DataFrame:
         if self._wid_index is not None:
             # hash-bucket partition pruning: the bucket expression folds to
             # a literal (xxhash64 of a constant), so the scan touches
@@ -186,7 +208,7 @@ class QueryEngine:
             )
         if where is not None:
             df = df.filter(F.col("where") == where)
-        return df.dropDuplicates(["id"])
+        return self._dedup(df, dedup)
 
     # -- O4/O5: latest ------------------------------------------------------
     @staticmethod
@@ -216,25 +238,26 @@ class QueryEngine:
         where: str,
         as_of=None,
         lookback_days: int = DEFAULT_LOOKBACK_DAYS,
-    ) -> DataFrame:
+    ) -> Row | None:
         """Newest file for (what, where) per the reference's day-bucket walk
         (querier.py:407-417): within the newest non-empty bucket of the
-        lookback window, max by (start, create_time).  Returns 0-or-1 rows.
+        lookback window, max by (start, create_time).  Returns the row, or
+        None when the window holds no file.
 
         Fast path (O5, querier.py:355-379): when a materialized latest table
-        is attached, probe it first — a single point-read job of a tiny
-        table — and fall back to the full scan only if the row is absent or
-        starts beyond the 24 h lookforward cap (the cap exists only on the
-        latest-table path, as in the reference)."""
+        is attached, probe it first — one job over a tiny table that holds
+        at most one row per (what, where), collected whole — and fall back
+        to the full scan only if the row is absent or starts beyond the
+        24 h lookforward cap (the cap exists only on the latest-table path,
+        as in the reference)."""
         now = normalize_date(as_of if as_of is not None else "now")
         if self._latest is not None:
-            hit = self._latest.filter(
+            rows = self._latest.filter(
                 (F.col("what_where_key") == f"{what}:{where}")
                 & (F.col("start") <= F.lit(now + LATEST_MAX_LOOKFORWARD_MS))
-            ).drop("what_where_key")
-            rows = hit.limit(1).collect()  # ONE job: probe + fetch together
+            ).drop("what_where_key").collect()
             if rows:
-                return self.files_df.sparkSession.createDataFrame(rows, hit.schema)
+                return rows[0]
         now_bucket = now // DAY_MS
         lo_bucket = (now - lookback_days * DAY_MS) // DAY_MS
         end_eff = F.coalesce(F.col("end"), F.col("start"))
@@ -247,11 +270,13 @@ class QueryEngine:
             & (end_eff >= F.lit(lo_bucket * DAY_MS))
         )
         cols = [c for c in df.columns]
-        return (
+        rows = (
             df.groupBy("what", "where")
             .agg(F.max_by(F.struct(*cols), self._latest_rank(now_bucket)).alias("r"))
             .select("r.*")
+            .collect()
         )
+        return rows[0] if rows else None
 
     def latest_all(self, as_of=None, lookback_days: int = DEFAULT_LOOKBACK_DAYS) -> DataFrame:
         """Bulk variant: latest per every (what, where) — the materialized
@@ -273,8 +298,11 @@ class QueryEngine:
         )
 
     # -- O11: point lookup --------------------------------------------------
-    def by_id(self, file_id: str) -> DataFrame:
-        return self.files_df.filter(F.col("id") == file_id).dropDuplicates(["id"])
+    def by_id(self, file_id: str, *, dedup: bool = True) -> DataFrame:
+        """Rows with this id.  A point lookup collects the ``dedup=False``
+        frame whole and takes its first row: one shuffle-free job, where
+        ``limit(1)`` would escalate partition by partition."""
+        return self._dedup(self.files_df.filter(F.col("id") == file_id), dedup)
 
     # -- O6: stable pagination emulation ------------------------------------
     def page(self, df: DataFrame, page: int = 0, page_size: int = MAX_RESULTS) -> DataFrame:
@@ -325,15 +353,32 @@ class QueryEngine:
         page of rows plus an opaque resumption token, or None when the
         result set is exhausted.  The token wraps the keyset position
         (page_after), so each page is a bounded pushable-predicate top-k —
-        collecting page_size rows on the driver is the point of the API."""
+        collecting page_size rows on the driver is the point of the API.
+
+        ``df`` may repeat an id: the page keeps its first row per id
+        (querier.py:146-163).  Copies of a row share its (start, id), so
+        they sit together in keyset order and the strict cursor predicate
+        skips any left over.  When dropping copies leaves a full fetch
+        short, the page tops up with a keyset fetch after the last row
+        read, so a short page still means the result set is exhausted.
+        Without copies that is one top-k job per page."""
         c = decode_cursor(cursor)
-        page = self.page_after(
-            df,
-            c["last_start"] if c else None,
-            c["last_id"] if c else None,
-            page_size,
-        )
-        rows = page.collect()
+        last_start = c["last_start"] if c else None
+        last_id = c["last_id"] if c else None
+        rows: list = []
+        seen: set = set()
+        while True:
+            # fetch only what the page still lacks: each fetched row is
+            # kept or dropped, so the page can never overshoot page_size
+            want = page_size - len(rows)
+            raw = self.page_after(df, last_start, last_id, want).collect()
+            for r in raw:
+                if r["id"] not in seen:
+                    seen.add(r["id"])
+                    rows.append(r)
+            if len(raw) < want or len(rows) == page_size:
+                break
+            last_start, last_id = raw[-1]["start"], raw[-1]["id"]
         token = None
         if len(rows) == page_size:
             token = encode_cursor(rows[-1]["start"], rows[-1]["id"])

@@ -20,6 +20,34 @@ from pyspark.sql import SparkSession
 _LOCAL_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+# Share of physical memory the single local-mode JVM may take as heap: the
+# rest is left for its off-heap use (Arrow, Netty, metaspace), the Python
+# workers and the rest of the host.  16g, the former fixed default, is
+# kept as the cap (it suits the gate SFs).
+_HEAP_SHARE = 0.45
+_HEAP_CAP_MB = 16 * 1024
+_HEAP_FALLBACK = "4g"
+
+
+def local_driver_memory(meminfo: str | None = None) -> str:
+    """Default ``spark.driver.memory`` for local mode: about 45% of
+    ``MemTotal`` from ``/proc/meminfo`` (or the given text), capped at
+    16g, as a ``<n>m`` string.  Falls back to 4g when the total cannot be
+    read (no /proc, or no MemTotal line)."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as f:
+                meminfo = f.read()
+        except OSError:
+            return _HEAP_FALLBACK
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            total_kb = int(line.split()[1])
+            mb = min(int(total_kb / 1024 * _HEAP_SHARE), _HEAP_CAP_MB)
+            return f"{mb}m"
+    return _HEAP_FALLBACK
+
+
 def get_spark(app_name: str = "datalake_spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -35,37 +63,18 @@ def get_spark(app_name: str = "datalake_spark", master: str | None = None) -> Sp
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        # r15 config-tier knobs (guide §9), each A/B'd one at a time
-        # against the protocol bench — env-overridable so the A/B legs
-        # and any production deployment can flip them without a code
-        # change; defaults hold the measured-winning value:
-        # shuffle/spill compression codec (guide §2.3: zstd compresses
-        # markedly better for a bit more CPU; at sf0.1 the shuffles are
-        # tiny so local delta is noise — the default stays lz4 unless
-        # the A/B shows a win, see OPTIMIZATION_r15.md)
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        # guide §3.1: allow shuffled-hash where its size conditions are
-        # met instead of always sort-merge (A/B'd; see
-        # OPTIMIZATION_r15.md)
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
     )
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         # local mode is one JVM: the "driver" heap is the whole
-        # executor memory too.  16g suits the gate SFs; sf10 one-offs
-        # (60 M-row windows under the 180-plan fuzz battery) need more
-        # — env-tunable so the scale harness can raise it without
-        # changing the driver's defaults.
+        # executor memory too.  The default is sized from the host (see
+        # local_driver_memory); sf10 one-offs (60 M-row windows under the
+        # 180-plan fuzz battery) need more — env-tunable so the scale
+        # harness can raise it without changing the default.
         builder = builder.master(f"local[{cpus}]").config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or local_driver_memory(),
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -13,7 +13,12 @@ import urllib.request
 
 import pytest
 
-from datalake_spark.http_api import DatalakeHttpApp, HttpQuerier, serve
+from datalake_spark.http_api import (
+    DatalakeHttpApp,
+    HttpQuerier,
+    RequestMonitor,
+    serve,
+)
 from datalake_spark.metadata import DAY_MS
 from datalake_spark.query import QueryEngine
 from tests.test_query_engine import T0, make_files_df
@@ -108,12 +113,11 @@ class TestDualBackendParity:
         assert {r["metadata"]["id"] for r in got} == want == {"e", "f"}
 
     def test_latest(self, engine, server):
-        eng = engine.latest(
-            "nginx", "h1", lookback_days=999999).collect()
+        eng = engine.latest("nginx", "h1", lookback_days=999999)
         got = HttpQuerier(server).query_latest(
             "nginx", "h1", lookback=999999)
         assert got is not None
-        assert got["metadata"]["id"] == eng[0]["id"]
+        assert got["metadata"]["id"] == eng["id"]
 
     def test_latest_missing_is_none(self, server):
         assert HttpQuerier(server).query_latest(
@@ -272,6 +276,105 @@ class TestRoutes:
         assert not ids1 & ids2  # no duplicates across pages
 
 
+# -- one Spark job per request + page-scoped dedup ---------------------------
+
+
+def _wsgi_json(app, path, qs=""):
+    status, body = TestRequestMonitor._call(app, path, qs)
+    assert status == "200 OK", (status, body)
+    return body
+
+
+class TestOneSparkJobPerRequest:
+    """Every read route runs exactly one Spark job: a job's fixed cost is
+    most of a request's time.  Counted the way perfbench/tracing.py counts
+    them, through a job group and the status tracker, on an app built from
+    a real catalog as ``cli serve`` builds it (latest table and work-id
+    index attached)."""
+
+    @pytest.fixture(scope="class")
+    def app(self, spark, tmp_path_factory, store_root):
+        from datalake_spark.archive import Archive
+        from datalake_spark.catalog import Catalog
+
+        cat = Catalog(spark, str(tmp_path_factory.mktemp("catalog")))
+        cat.append(make_files_df(spark, [
+            dict(r, url=f"file://{store_root}/{r['id']}/data") for r in ROWS
+        ]))
+        cat.build_work_id_index(num_buckets=8)
+        cat.refresh_latest()
+        engine = QueryEngine(cat.files(), latest_table=cat.latest_table(),
+                             work_id_index=cat.work_id_index())
+        return DatalakeHttpApp(engine, archive=Archive(f"file://{store_root}"),
+                               page_size=2)
+
+    @pytest.mark.parametrize("path,qs", [
+        ("/v0/archive/files/a/metadata", ""),
+        ("/v0/archive/files/a/data", ""),
+        ("/v0/archive/files/", f"what=nginx&start={T0}&end={T0 + 9000}"),
+        ("/v0/archive/files/", "what=nginx&work_id=job1"),
+        ("/v0/archive/latest/nginx/h1", "lookback=999999"),
+    ])
+    def test_route_runs_one_job(self, spark, app, path, qs):
+        sc = spark.sparkContext
+        group = f"one-job-{path}?{qs}"
+        sc.setJobGroup(group, "test")
+        try:
+            _wsgi_json(app, path, qs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status tracker through the async
+        # listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+class TestPageScopedDedup:
+    """Listings dedup by id within the page (the reference's
+    querier.py:146-163); copies of a row that straddle a page boundary
+    must neither repeat an id nor end the listing early."""
+
+    # keyset order r0 r1 r1 r2 r2 r2 r3 r4 r4 r5 r6 r6
+    COPIES = {"r0": 1, "r1": 2, "r2": 3, "r3": 1, "r4": 2, "r5": 1, "r6": 2}
+
+    @pytest.fixture(scope="class")
+    def engine(self, spark):
+        rows = [
+            {"id": fid, "what": "w", "where": "s",
+             "start": T0 + 10 * int(fid[1:]), "end": None, "work_id": "job"}
+            for fid, n in self.COPIES.items() for _ in range(n)
+        ]
+        return QueryEngine(make_files_df(spark, rows))
+
+    @pytest.mark.parametrize("page_size", [2, 3])
+    @pytest.mark.parametrize("qs", [
+        f"what=w&start={T0}&end={T0 + 1000}", "what=w&work_id=job",
+    ])
+    def test_drained_listing_has_each_id_once(self, engine, page_size, qs):
+        from urllib.parse import urlsplit
+
+        app = DatalakeHttpApp(engine, page_size=page_size)
+        pages = []
+        while qs is not None:
+            page = json.loads(_wsgi_json(app, "/v0/archive/files/", qs))
+            pages.append(page)
+            qs = page["next"] and urlsplit(page["next"]).query
+        ids = [r["metadata"]["id"] for p in pages for r in p["records"]]
+        assert ids == sorted(self.COPIES)
+        # next is null exactly on the last page, the only short one
+        for p in pages[:-1]:
+            assert len(p["records"]) == page_size and p["next"]
+        assert len(pages[-1]["records"]) < page_size
+
+    def test_engine_frames_keep_global_dedup(self, engine):
+        """The CLI, the Python API and the parity queries still see one
+        row per id from by_time / by_work_id / by_id."""
+        assert engine.by_time("w", T0, T0 + 1000).count() == 7
+        assert engine.by_work_id("job", "w").count() == 7
+        assert engine.by_id("r2").count() == 1
+        assert engine.by_id("r2", dedup=False).count() == 3
+
+
 class TestRequestMonitor:
     """Per-request tracing hook — the reference's monitor_performance
     Sentry instrumentation (api/datalake_api/sentry.py:39-54) as a
@@ -336,3 +439,19 @@ class TestMetricsEndpoint:
         }
         h = routes[("/health/", 200)]
         assert h["n"] == 2 and h["mean_ms"] >= 0 and h["n_err"] == 0
+        assert h["window_n"] == 2
+        assert 0 <= h["p50_ms"] <= h["p99_ms"] <= h["max_ms"]
+
+    def test_metrics_percentiles_over_the_ring_buffer(self):
+        """p50/p99 are nearest-rank over the buffered window, computed at
+        snapshot time; records that left the window no longer count."""
+        mon = RequestMonitor(keep_last=100)
+        mon.record("/x", 200, 5000.0)  # pushed out of the window
+        for ms in range(1, 101):
+            mon.record("/x", 200, float(ms))
+        [x] = mon.snapshot()
+        assert (x["n"], x["window_n"]) == (101, 100)
+        assert (x["p50_ms"], x["p99_ms"], x["max_ms"]) == (50.0, 99.0, 5000.0)
+        mon.records.clear()  # what flush_parquet leaves behind
+        [x] = mon.snapshot()
+        assert (x["window_n"], x["p50_ms"], x["p99_ms"]) == (0, None, None)

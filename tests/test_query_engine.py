@@ -97,8 +97,8 @@ class TestLatest:
             {"id": "new", "what": "w", "where": "s", "start": T0 + 1000, "end": None},
         ]
         eng = QueryEngine(make_files_df(spark, rows))
-        got = eng.latest("w", "s", as_of=T0 + DAY_MS).collect()
-        assert [r["id"] for r in got] == ["new"]
+        got = eng.latest("w", "s", as_of=T0 + DAY_MS)
+        assert got["id"] == "new"
 
     def test_create_time_breaks_ties(self, spark):
         # test_archive_querier.py:510-530
@@ -107,23 +107,23 @@ class TestLatest:
             {"id": "y", "what": "w", "where": "s", "start": T0, "end": None, "create_time": T0 + 2},
         ]
         eng = QueryEngine(make_files_df(spark, rows))
-        assert [r["id"] for r in eng.latest("w", "s", as_of=T0 + 1000).collect()] == ["y"]
+        assert eng.latest("w", "s", as_of=T0 + 1000)["id"] == "y"
 
     def test_empty_archive(self, engine):
-        assert engine.latest("nope", "h1", as_of=T0).count() == 0
+        assert engine.latest("nope", "h1", as_of=T0) is None
 
     def test_lookback_window(self, spark):
         rows = [{"id": "old", "what": "w", "where": "s", "start": T0, "end": None}]
         eng = QueryEngine(make_files_df(spark, rows))
         # 15 days later with default 14-day lookback -> not found
-        assert eng.latest("w", "s", as_of=T0 + 15 * DAY_MS).count() == 0
-        assert eng.latest("w", "s", as_of=T0 + 13 * DAY_MS).count() == 1
+        assert eng.latest("w", "s", as_of=T0 + 15 * DAY_MS) is None
+        assert eng.latest("w", "s", as_of=T0 + 13 * DAY_MS) is not None
 
     def test_lookforward_rejects_future(self, spark):
         # records starting >24h after as_of are invalid (querier.py:353)
         rows = [{"id": "fut", "what": "w", "where": "s", "start": T0 + 2 * DAY_MS, "end": None}]
         eng = QueryEngine(make_files_df(spark, rows))
-        assert eng.latest("w", "s", as_of=T0).count() == 0
+        assert eng.latest("w", "s", as_of=T0) is None
 
     def test_bucket_spanning_record_beats_later_start(self, spark):
         """The reference walks day buckets newest-first and records fan out to
@@ -139,8 +139,8 @@ class TestLatest:
              "start": T0 + DAY_MS + 5000, "end": T0 + DAY_MS + 6000},
         ]
         eng = QueryEngine(make_files_df(spark, rows))
-        got = eng.latest("w", "s", as_of=T0 + 2 * DAY_MS + 2000).collect()
-        assert [r["id"] for r in got] == ["spanner"]
+        got = eng.latest("w", "s", as_of=T0 + 2 * DAY_MS + 2000)
+        assert got["id"] == "spanner"
 
 
 class TestPagination:
@@ -421,8 +421,8 @@ class TestLatestFastPath:
             [{"id": "new", "what": "nginx", "where": "h1", "start": T0 + 5000, "end": None}],
         )
         eng = QueryEngine(files, latest_table=latest)
-        got = eng.latest("nginx", "h1", as_of=T0 + DAY_MS).collect()
-        assert [r["id"] for r in got] == ["new"]
+        got = eng.latest("nginx", "h1", as_of=T0 + DAY_MS)
+        assert got["id"] == "new"
 
     def test_future_row_falls_back_to_scan(self, spark):
         files = make_files_df(
@@ -443,8 +443,8 @@ class TestLatestFastPath:
             ],
         )
         eng = QueryEngine(files, latest_table=latest)
-        got = eng.latest("nginx", "h1", as_of=T0 + 2000).collect()
-        assert [r["id"] for r in got] == ["ok"]
+        got = eng.latest("nginx", "h1", as_of=T0 + 2000)
+        assert got["id"] == "ok"
 
     def test_miss_falls_back(self, spark):
         files = make_files_df(
@@ -456,8 +456,8 @@ class TestLatestFastPath:
             [{"id": "x", "what": "syslog", "where": "h9", "start": T0, "end": None}],
         )
         eng = QueryEngine(files, latest_table=latest)
-        got = eng.latest("nginx", "h1", as_of=T0 + 2000).collect()
-        assert [r["id"] for r in got] == ["only"]
+        got = eng.latest("nginx", "h1", as_of=T0 + 2000)
+        assert got["id"] == "only"
 
     def test_compaction(self, spark, tmp_path):
         """Many small appends → compact → fewer files, identical contents,

@@ -83,7 +83,8 @@ def main() -> None:
             .config("spark.ui.enabled", "false")
             .master(f"local[{cpus}]")
             .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+                    os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                    or sess_mod.local_driver_memory())
         )
         for k, v in builder_conf.items():
             b = b.config(k, v)
